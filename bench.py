@@ -32,10 +32,14 @@ def _release_state(spark) -> None:
 
 
 GRADED_SF_DIR = "/root/testdata/sf0.1"
+GRADED_CPUS = 32
 
 
 def resolve_artifact_path(
-    repo_dir: str, contaminated: bool, sf_dir: str = GRADED_SF_DIR
+    repo_dir: str,
+    contaminated: bool,
+    sf_dir: str = GRADED_SF_DIR,
+    cpus: int = GRADED_CPUS,
 ) -> str:
     """Committed-record guard (round-6 VERDICT directive #1): a run
     whose canary self-flags contaminated in EITHER section must not
@@ -53,10 +57,15 @@ def resolve_artifact_path(
     exact near-miss happened in round 7's code-path testing). The
     comparison is realpath-normalized (round-8 ADVICE): a symlinked or
     relative alias of the graded dir must not divert a genuinely
-    graded clean run to the local file."""
+    graded clean run to the local file. A run at any other core count
+    is diverted the same way: the record is graded at GRADED_CPUS, and
+    a clean 8-cpu run once replaced the 32-cpu record."""
     if contaminated and os.environ.get("SPARK_GRAFT_ALLOW_CONTAMINATED") != "1":
         return os.path.join(repo_dir, "BENCH_result.rejected.json")
-    if os.path.realpath(sf_dir) != os.path.realpath(GRADED_SF_DIR):
+    if (
+        os.path.realpath(sf_dir) != os.path.realpath(GRADED_SF_DIR)
+        or cpus != GRADED_CPUS
+    ):
         return os.path.join(repo_dir, "BENCH_result.local.json")
     return os.path.join(repo_dir, "BENCH_result.json")
 
@@ -1028,16 +1037,20 @@ def main() -> None:
         payload["canary"].get("contaminated")
         or payload.get("sf1_canary", {}).get("contaminated")
     )
-    out_path = resolve_artifact_path(repo_dir, any_contaminated, sf_dir)
+    out_path = resolve_artifact_path(
+        repo_dir, any_contaminated, sf_dir, payload["cpus"]
+    )
     if out_path.endswith(".rejected.json"):
         print("# ** CONTAMINATED RUN — payload diverted to "
               "BENCH_result.rejected.json; the committed BENCH_result.json "
               "keeps the last clean run. Re-run until both canaries are "
               "clean (round-6 VERDICT directive #1).", file=sys.stderr)
     elif out_path.endswith(".local.json"):
-        print(f"# non-graded SF ({sf_dir}) — payload written to "
+        print(f"# non-graded configuration (sf {sf_dir}, cpus "
+              f"{payload['cpus']}) — payload written to "
               f"BENCH_result.local.json; the committed record only ever "
-              f"holds the graded sf0.1 configuration.", file=sys.stderr)
+              f"holds the graded sf0.1, {GRADED_CPUS}-cpu configuration.",
+              file=sys.stderr)
     with open(out_path, "w") as f:
         json.dump(payload, f, indent=1)
         f.write("\n")

@@ -64,6 +64,34 @@ def test_non_graded_sf_is_diverted_even_when_clean(monkeypatch):
     )
 
 
+def test_non_graded_cpus_is_diverted_even_when_clean(monkeypatch):
+    # a clean 8-cpu run replaced the committed 32-cpu record — the
+    # record means the graded core count too
+    monkeypatch.delenv("SPARK_GRAFT_ALLOW_CONTAMINATED", raising=False)
+    b = _bench()
+    assert (
+        b.resolve_artifact_path("/r", False, b.GRADED_SF_DIR, 8)
+        == "/r/BENCH_result.local.json"
+    )
+    assert (
+        b.resolve_artifact_path("/r", False, b.GRADED_SF_DIR, b.GRADED_CPUS)
+        == "/r/BENCH_result.json"
+    )
+    # contamination outranks the cpus routing
+    assert (
+        b.resolve_artifact_path("/r", True, b.GRADED_SF_DIR, 8)
+        == "/r/BENCH_result.rejected.json"
+    )
+
+
+def test_committed_record_is_graded_configuration():
+    import json
+
+    b = _bench()
+    rec = json.load(open(os.path.join(_REPO, "BENCH_result.json")))
+    assert (rec["cpus"], rec["sf"]) == (b.GRADED_CPUS, 0.1)
+
+
 def test_local_artifact_is_gitignored():
     gi = open(os.path.join(_REPO, ".gitignore")).read()
     assert "BENCH_result.local.json" in gi

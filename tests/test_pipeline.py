@@ -5,6 +5,7 @@ and the end-to-end run over the committed fixtures."""
 from __future__ import annotations
 
 import os
+import re
 
 import pytest
 from pyspark.sql import functions as F
@@ -232,3 +233,110 @@ def test_xslate_ubuntu_upstream(spark):
     assert r["module_name"] == "openssl"
     assert [(t["op_code"], t["version"]) for t in r["affected_ver"]] == [("lt", "1.1.1g")]
     assert [(t["op_code"], t["version"]) for t in r["fixed_ver"]] == [("gteq", "1.1.1g")]
+
+
+# ---------------------------------------------------------------------------
+# one run = one scan per feed; a later run reads fresh input
+# ---------------------------------------------------------------------------
+
+# the only feed two sources read: wolfi and chainguard each take their
+# rows from the chainguard OSV tree
+SHARED_FEED = "chainguard/osv-v2"
+# the alternative NVD XML feed is not part of a pipeline run
+UNREAD_FEEDS = {"nvd-xml"}
+
+
+def _run_to_container(spark, root: str, out_dir: str):
+    """pipeline.run + update_db → (formatted plan descriptions of the
+    run's SQL executions, {container member: bytes})."""
+    from vul_dbgen_spark.sinks import memdb
+
+    sc = spark.sparkContext
+    store = spark._jsparkSession.sharedState().statusStore()
+
+    def execution_ids():
+        execs = store.executionsList()
+        return {int(execs.apply(i).executionId()) for i in range(execs.size())}
+
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    before = max(execution_ids(), default=-1)
+    os_out, app_out = pipeline.run(spark, root)
+    memdb.update_db(os_out, app_out, out_dir, version="1.0", update_time="2024-01-01T00:00:00+00:00")
+    # the status store is fed from the listener bus, AQE plan updates included
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    plans = [
+        store.execution(i).get().physicalPlanDescription()
+        for i in sorted(execution_ids())
+        if i > before
+    ]
+    _, files = memdb.read_db_file(os.path.join(out_dir, memdb.REGULAR_DB_NAME))
+    return plans, files
+
+
+def _final_plan(desc: str) -> str:
+    """The executed tree of a formatted plan description (AQE's final
+    plan when the plan is adaptive)."""
+    if "== Final Plan ==" in desc:
+        return desc.split("== Final Plan ==", 1)[1].split("== Initial Plan ==", 1)[0]
+    return desc.split("== Physical Plan ==", 1)[1].split("\n\n", 1)[0]
+
+
+def _scans_per_location(plans: list[str]) -> dict[str, int]:
+    from collections import Counter
+
+    counts = Counter()
+    for desc in plans:
+        for node in re.findall(r"Scan \w+ +\((\d+)\)", _final_plan(desc)):
+            details = re.search(rf"\n\({node}\) Scan [^\n]*\n(.*?)\n\n", desc, re.S).group(1)
+            loc = re.search(r"Location: \w+ \[([^\]]*)\]", details)
+            if loc:  # in-memory and checkpointed rows have no Location
+                counts[loc.group(1)] += 1
+    return counts
+
+
+@pytest.fixture(scope="module")
+def fresh_run(spark, tmp_path_factory):
+    import shutil
+
+    root = str(tmp_path_factory.mktemp("feeds") / "vul-source")
+    shutil.copytree(ROOT, root)
+    plans, files = _run_to_container(spark, root, str(tmp_path_factory.mktemp("db1")))
+    return root, plans, files
+
+
+def test_each_feed_is_scanned_once_per_run(fresh_run):
+    root, plans, _ = fresh_run
+    scans = _scans_per_location(plans)
+    feeds_seen = set()
+    for location, n in scans.items():
+        first = location.split(",")[0].removeprefix("file:")
+        feed = os.path.relpath(first, root)
+        feeds_seen.add(feed.split(os.sep)[0])
+        want = 2 if feed.startswith(SHARED_FEED + os.sep) else 1
+        assert n == want, f"{feed}: scanned {n}x per run, want {want}x"
+    assert feeds_seen == set(os.listdir(root)) - UNREAD_FEEDS
+    python_nodes = sum(
+        len(re.findall(r"\b(?:MapInPandas|ArrowEvalPython)\b", _final_plan(d))) for d in plans
+    )
+    assert python_nodes <= 16, f"{python_nodes} Python parse/serialize nodes per run"
+
+
+def test_second_run_reads_edited_feed(spark, tmp_path_factory, fresh_run):
+    import json
+
+    root, _, first = fresh_run
+
+    def cve_3449(files):
+        lines = [json.loads(x) for x in files["debian_full.tb"].decode().splitlines()]
+        return next(x for x in lines if (x["NS"], x["N"]) == ("debian:10", "CVE-2021-3449"))
+
+    assert cve_3449(first)["C3"]["Score"] == 5.9
+    nvd = os.path.join(root, "nvd", "nvdcve-2.0-sample.json")
+    text = open(nvd).read()
+    old = '"vectorString": "CVSS:3.1/AV:N/AC:H/PR:N/UI:N/S:U/C:N/I:N/A:H", "baseScore": 5.9, "baseSeverity": "MEDIUM"'
+    assert text.count(old) == 1
+    # a different length too, so a stale file listing would show
+    with open(nvd, "w") as f:
+        f.write(text.replace(old, old.replace("5.9", "9.8").replace("MEDIUM", "CRITICAL")))
+    _, second = _run_to_container(spark, root, str(tmp_path_factory.mktemp("db2")))
+    assert cve_3449(second)["C3"]["Score"] == 9.8

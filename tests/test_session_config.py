@@ -46,3 +46,15 @@ def test_jvm_actually_launched_with_pretouched_fixed_heap(spark):
     assert f"-Xms{mem}" in jvm_args, jvm_args
     assert f"-Xmx{mem}" in jvm_args, jvm_args
     assert "-XX:+AlwaysPreTouch" in jvm_args, jvm_args
+
+
+def test_file_stream_sink_probe_is_quiet_and_session_level_unchanged(spark):
+    # every glob read probes for a streaming-sink metadata directory and
+    # the miss would log a full FileNotFoundException trace at WARN;
+    # only that logger is raised, the session keeps WARN
+    from vul_dbgen_spark.session import FILE_STREAM_SINK_LOGGER
+
+    log_manager = spark._jvm.org.apache.logging.log4j.LogManager
+    level = log_manager.getLogger(FILE_STREAM_SINK_LOGGER).getLevel().toString()
+    assert level == "ERROR"
+    assert log_manager.getRootLogger().getLevel().toString() == "WARN"

@@ -69,3 +69,22 @@ def test_winnow_persist_exists_while_lazy_frame_lives(spark):
     assert _n_persistent(spark) >= 1  # the fingerprint table is cached
     _release(spark)
     assert _n_persistent(spark) == 0
+
+
+def test_pipeline_checkpoints_are_released(spark):
+    """pipeline.run cuts its shared intermediates with localCheckpoint;
+    those RDDs live until the hygiene step, which must release them."""
+    import os
+
+    from vul_dbgen_spark.plans import pipeline
+
+    root = os.path.join(
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "fixtures", "vul-source"
+    )
+    _release(spark)
+    os_out, app_out = pipeline.run(spark, root, ["redhat"], ["k8s"])
+    os_out.count()
+    app_out.count()
+    assert _n_persistent(spark) >= 1
+    _release(spark)
+    assert _n_persistent(spark) == 0

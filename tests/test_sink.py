@@ -274,6 +274,24 @@ def test_partitioned_ndjson_unknown_bucket_raises(spark, tmp_path_factory):
     )
 
 
+def test_partitioned_ndjson_null_namespace_raises(spark, tmp_path_factory):
+    """A null namespace routes to no bucket; the guard's message must
+    survive the null (concat with null is null) as the documented
+    ValueError."""
+    from vul_dbgen_spark.schemas import OS_VULNS
+    from vul_dbgen_spark.sources.apps import load_all
+    from vul_dbgen_spark.sources.base import conform
+
+    os_out = conform(
+        spark.createDataFrame([("CVE-2020-0001", None)], "name string, namespace string"),
+        OS_VULNS,
+    )
+    app_out = load_all(spark, ROOT)
+    out_dir = str(tmp_path_factory.mktemp("ndjson_nullns"))
+    with pytest.raises(ValueError, match="No known namespace bucket for: None"):
+        memdb.write_partitioned_ndjson(os_out, app_out, out_dir)
+
+
 def test_update_db_unknown_bucket_raises(spark, tmp_path_factory):
     """The bad-bucket guard rides the assembly iteration (round 8): an
     os row whose namespace maps to no bucket must still raise before any

@@ -13,7 +13,7 @@ Flag surface mirrors the reference (``dbgen.go:38-86``):
 
 Flow is the reference's main: open db → updater.Update → db.UpdateDb →
 "Update CVE database successfully" (``dbgen.go:63-86``), expressed as
-pipeline.run → memdb.update_db on one Spark lineage.
+pipeline.run → memdb.update_db in one Spark session.
 """
 
 from __future__ import annotations

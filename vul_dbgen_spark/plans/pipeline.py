@@ -13,7 +13,24 @@ Mirrors ``fetch``/``Update`` (``/root/reference/updater/updater.go:
    severity gate (J1/J2/F2).
 
 Scale notes: nvd_meta (~300k rows) broadcasts; distro/app fact sides
-shuffle only on their group keys; everything else is narrow.
+shuffle only on their group keys; everything else is narrow. Three
+intermediates each feed several consumers — nvd_meta
+(whitelist injection, version backfill, both meta builds), the upserted
+distro rows (their meta build and their metadata assignment) and the
+corrected app rows (likewise). A lazy plan re-executes a shared subtree
+once per consumer and once per action, and ``memdb.update_db`` drains
+the two sides as two actions, so without a cut every feed would be
+parsed several times per run. Each of the three is therefore cut off
+its lineage with ``localCheckpoint(eager=False)``; RHEL's parsed OVAL
+rows get the same cut inside ``sources.rhel``. Where the cut plan holds
+a shuffle, AQE runs its upstream stages at the ``localCheckpoint`` call,
+so ``run`` itself executes the source and upsert stages and the sink
+drains only the enrich-and-serialize tail. The checkpointed RDDs are
+new on every call (a later run never reads an earlier run's data) and
+are released by the caller's session hygiene (``getPersistentRDDs``
+unpersist), like every other checkpoint in the engine. ``persist`` is
+not used: the cache manager matches cached data by plan, so a second
+run in the same session would read the first run's rows.
 """
 
 from __future__ import annotations
@@ -64,15 +81,6 @@ def load_distro_vulns(
     if not names:
         raise ValueError("no distro sources selected")
 
-    # Plan construction is ~10 s of the composed pipeline's floor, but
-    # thread-pooling the builders measured a WASH (round 8): a jstack of
-    # the pooled build shows every JVM pinned thread idle in socket
-    # reads waiting for Python — the cost is Python-side per-call work
-    # under the GIL (pyspark wrapper/protocol overhead), which threads
-    # cannot overlap. Sequential build kept deliberately; the fix that
-    # would matter is fewer py4j calls (SQL-string expression building),
-    # which is out of scope for an optimization round over
-    # semantics-locked parsers.
     parts = []
     for prio, name in enumerate(names):
         df = do_vulnerabilities_namespacing(DISTRO_SOURCES[name](spark, source_root))
@@ -90,14 +98,15 @@ def run(
     app_sources: list[str] | None = None,
 ) -> tuple[DataFrame, DataFrame]:
     """Full pipeline → (os_vulns, app_vulns), enriched, gated, upserted."""
-    nvd_meta = META_SOURCES["nvd"](spark, source_root)
+    # shared intermediates are cut off their lineage (see "Scale notes")
+    nvd_meta = META_SOURCES["nvd"](spark, source_root).localCheckpoint(eager=False)
 
     os_vulns = load_distro_vulns(spark, source_root, distro_sources)
-    os_vulns = os_keyed_upsert(os_vulns)
+    os_vulns = os_keyed_upsert(os_vulns).localCheckpoint(eager=False)
 
     apps = load_all_apps(spark, source_root, app_sources)
     apps = enrich.inject_nvd_whitelist_apps(apps, nvd_meta)
-    apps = enrich.correct_app_affected_version(apps, nvd_meta)
+    apps = enrich.correct_app_affected_version(apps, nvd_meta).localCheckpoint(eager=False)
 
     distro_meta = enrich.build_distro_meta(os_vulns, nvd_meta)
     app_meta = enrich.build_app_meta(apps, nvd_meta)

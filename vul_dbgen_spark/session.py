@@ -14,6 +14,8 @@ from pyspark.sql import SparkSession
 
 _REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
+FILE_STREAM_SINK_LOGGER = "org.apache.spark.sql.execution.streaming.sinks.FileStreamSink"
+
 
 def _pythonpath_with_repo() -> str:
     existing = os.environ.get("PYTHONPATH", "")
@@ -145,4 +147,11 @@ def get_spark(
             builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    # every glob read probes for a streaming-sink metadata directory and
+    # logs the miss at WARN with a full FileNotFoundException trace;
+    # only that one logger is raised to ERROR
+    jvm = spark._jvm
+    jvm.org.apache.logging.log4j.core.config.Configurator.setLevel(
+        FILE_STREAM_SINK_LOGGER, jvm.org.apache.logging.log4j.Level.ERROR
+    )
     return spark

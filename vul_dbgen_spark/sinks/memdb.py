@@ -329,17 +329,15 @@ def update_db(
     ``toLocalIterator`` (one partition at a time) — the single-file
     container format forces driver assembly, as in the reference.
 
-    Round 8: the bad-bucket guard rides the assembly iteration itself —
-    the old ``limit(1).collect()`` pre-check was a SECOND full action
-    over the os lineage (separate DataFrame actions share no shuffle
-    output, so the whole sources→enrich→upsert plan executed twice), and
-    every row passes through the iterator anyway, where a null bucket
-    raises the same error before any container file is written. The os
-    and app assemblies also run on two concurrent driver threads (guide
-    §2.6 — the sides are independent plans, so their jobs overlap and
-    the app side fills the os side's scheduling tail); each side writes
-    only its own buffers, in its own sorted order, so container bytes
-    are unchanged.
+    The bad-bucket guard rides the assembly iteration itself: every row
+    passes through the iterator, where a null bucket raises before any
+    container file is written, so no separate pre-check action runs.
+    The os and app assemblies are two actions on two concurrent driver
+    threads, so their jobs overlap; each side writes only its own
+    buffers, in its own sorted order, so container bytes do not depend
+    on the overlap. Both read the intermediates ``pipeline.run`` has
+    already checkpointed, so the drains run only the enrich-and-serialize
+    tail and no feed is parsed again here.
     """
     lines = os_vuln_lines(os_vulns)
     index_bufs = [io.BytesIO() for _ in BUCKETS]
@@ -471,7 +469,11 @@ def write_partitioned_ndjson(os_vulns: DataFrame, app_vulns: DataFrame, out_dir:
     _GUARD_MSG = "No known namespace bucket for: "
     guarded_index = F.when(
         F.col("bucket").isNull(),
-        F.raise_error(F.concat(F.lit(_GUARD_MSG), F.col("namespace"))),
+        # concat with a null namespace is null, which would lose the text;
+        # "None" is what update_db's guard prints for the same row
+        F.raise_error(
+            F.concat(F.lit(_GUARD_MSG), F.coalesce(F.col("namespace"), F.lit("None")))
+        ),
     ).otherwise(F.col("index_line"))
     lines = lines.repartitionByRange("bucket", "namespace", "name").sortWithinPartitions(
         "bucket", "namespace", "name"

@@ -244,5 +244,6 @@ def load(spark: SparkSession, source_root: str) -> DataFrame:
     pattern = os.path.join(source_root, "redhat", "*", "*.oval.xml*")
     if not glob.glob(pattern):
         raise FileNotFoundError(f"no RHEL OVAL files under {pattern}")
-    parsed = read_oval_files(spark, pattern, parse_rhel_doc)
+    # merge_cve_map and cull_rhsa read the parsed rows three times; parse once
+    parsed = read_oval_files(spark, pattern, parse_rhel_doc).localCheckpoint(eager=False)
     return cull_rhsa(merge_cve_map(parsed))
